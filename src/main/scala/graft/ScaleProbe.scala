@@ -43,7 +43,7 @@ object ScaleProbe {
           spark.range(0, k).select(col("id").cast("long").as("__r")))
         .withColumn("doc_id", col("doc_id") * k + col("__r"))
         // one replica-unique trailing token breaks EXACT-duplicate
-        // groups across replicas (a replica pair still reads ~n/(n+1)
+        // groups across replicas (a replica pair still reads ~n/(n+2)
         // token Jaccard, so the ≥0.9 MinHash output legitimately grows
         // quadratically in replica count — a data property, reported
         // as such; the claim under test is the BAND/DIGEST shuffle,
@@ -52,12 +52,13 @@ object ScaleProbe {
         .drop("__r")
     }
     // Dissimilar-replica corpus for the q24 INFRASTRUCTURE probe: four
-    // replica-unique trailing tokens push a replica pair's token
-    // Jaccard to ~n/(n+4) < 0.9 for the ~23-token docs here, so the
-    // ≥ 0.9 OUTPUT stays ~1×-sized and what's measured is the
-    // band/signature shuffle alone. The default replica (one unique
-    // token, still ≥ 0.9 similar) keeps its quadratic output BY
-    // DESIGN — that run measures output growth as a data property.
+    // replica-unique trailing tokens (eight distinct tokens across a
+    // replica pair) push the pair's token Jaccard to ~n/(n+8) < 0.9 for
+    // the ~23-token docs here, so the ≥ 0.9 OUTPUT stays ~1×-sized and
+    // what's measured is the band/signature shuffle alone. The default
+    // replica (one unique token, still ≥ 0.9 similar) keeps its quadratic
+    // output BY DESIGN — that run measures output growth as a data
+    // property.
     def docsDisjointAt(k: Int): DataFrame = {
       val d = graft.sources.Tables.documents(spark, dir)
       if (k == 1) d

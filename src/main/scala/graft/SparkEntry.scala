@@ -3716,10 +3716,19 @@ object SparkEntry {
   /** Materialize the documents table as a `container_NN.log` directory —
     * the on-disk corpus shape the reference's E1/E2 program consumes. The
     * write is DISTRIBUTED (spark text write; the follow-up rename touches
-    * file metadata only, never row data) and cached per sf dir behind a
-    * ready marker, so repeated queries reuse it. */
+    * file metadata only, never row data) and cached behind a ready marker,
+    * so repeated queries reuse it. The cache key is the sf dir plus the
+    * documents table's total file length and latest mtime, so a rewritten
+    * table gets a fresh corpus instead of the stale one. */
   private def logCorpusDir(s: SparkSession, dir: String): String = {
-    val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val docFiles = {
+      val root = new java.io.File(s"${dir.stripSuffix("/")}/documents.parquet")
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+      walk(root).filter(_.isFile)
+    }
+    val slug = dir.replaceAll("[^A-Za-z0-9]", "_") +
+      s"_${docFiles.map(_.length).sum}_${docFiles.map(_.lastModified).maxOption.getOrElse(0L)}"
     val root = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_logcorpus_$slug")
     val marker = new java.io.File(root, "_GRAFT_READY")
     if (!marker.exists()) {

@@ -27,8 +27,18 @@ case class EventTemplate(eventId: Long, size: Long, template: String)
   * The structure is deliberately driver/executor-agnostic and
   * Java-serializable: exact mode runs one tree over a totally-ordered
   * single partition (bit-for-bit reference fidelity); parallel mode runs
-  * one tree per partition and [[DrainTree.merge]]s them pairwise (the
-  * 100 TB path — see [[TemplateMining]]).
+  * one tree per partition and [[DrainTree.merge]]s them in partition order
+  * (the 100 TB path — see [[TemplateMining]]).
+  *
+  * The defaults are the reference's (`drain3.ini`, mirrored at
+  * `process_logs_v10.py:8-17`): depth 4, similarity 0.4, 100 children per
+  * node. DELIBERATE DEVIATION: the reference caps clusters at 10000
+  * (`max_clusters=10000`) with LRU eviction; the default here is UNBOUNDED
+  * (`maxClusters = 0`) because the LRU touch makes a bounded tree mutate
+  * on probe — unsafe for the broadcast matcher's concurrent executor
+  * threads. Behavior is identical until the 10001st cluster (its corpora
+  * mine ~1.1k); pass `maxClusters = 10000` for reference-faithful eviction
+  * in single-threaded mining.
   */
 final class DrainTree(
     val depth: Int = 4,
@@ -244,9 +254,12 @@ final class DrainTree(
 
   /** Parallel-mode combine: replay `other`'s clusters (ascending id, so the
     * replay order is the order they were first seen in that partition) into
-    * this tree, weight-preserving. Commutative up to cluster ids and
-    * borderline-similarity template splits; the golden/property tests bound
-    * the divergence (SURVEY.md §7.4). */
+    * this tree, weight-preserving. Mass is conserved, but the result depends
+    * on merge order: `a.merge(b)` and `b.merge(a)` can split or generalize
+    * borderline-similar templates differently and renumber clusters. Callers
+    * fix the order ([[TemplateMining.mineParallel]] folds in partition
+    * order); the golden/property tests bound the divergence from exact
+    * mining (SURVEY.md §7.4). */
   def merge(other: DrainTree): DrainTree = {
     other.clusters.foreach { t => addWeighted(t.template, t.size) }
     this

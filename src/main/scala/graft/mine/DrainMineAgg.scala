@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This is the custom-operator ladder's rung (b) applied to M1: built-in
   * aggregates cannot express "fold rows into a mergeable prefix-tree
-  * state", and the RDD `treeReduce` formulation
+  * state", and the RDD fold formulation
   * ([[TemplateMining.mineParallel]]) leaves Catalyst entirely. As a
   * `TypedImperativeAggregate` the SAME per-partition-tree + merge
   * architecture runs INSIDE Tungsten: partial aggregation grows one tree
@@ -28,13 +28,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Cluster ids are synthetic under parallel merge (same contract as
   * `mineParallel`); (template, size) content is the stable surface, and
-  * total mass is conserved (property-tested).
+  * total mass is conserved (property-tested). Unlike `mineParallel`, the
+  * final merge runs in shuffle-read order, so with more than one input
+  * partition the cluster split is not fixed by the partitioning; on one
+  * partition both replay the single tree into an empty one and agree.
   */
 case class DrainMineAgg(
     child: Expression,
-    depth: Int = 4,
-    simTh: Double = 0.4,
-    maxChildren: Int = 100,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[DrainTree] {
@@ -44,8 +44,7 @@ case class DrainMineAgg(
   override def dataType: DataType = DrainMineAgg.ResultType
   override def prettyName: String = DrainMineAgg.Name
 
-  override def createAggregationBuffer(): DrainTree =
-    new DrainTree(depth, simTh, maxChildren, 0)
+  override def createAggregationBuffer(): DrainTree = new DrainTree()
 
   override def update(tree: DrainTree, input: InternalRow): DrainTree = {
     val v = child.eval(input)

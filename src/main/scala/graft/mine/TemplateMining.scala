@@ -1,6 +1,8 @@
 package graft.mine
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
 
 /** DataFrame-level mining operators (M1-M4 in SURVEY.md §2.6) and the
@@ -13,10 +15,15 @@ import org.apache.spark.sql.functions.col
   *    sequential tail — used for fidelity tests and small corpora, never
   *    the scale path.
   *  - '''parallel''': one tree per partition (embarrassingly parallel over
-  *    the 100 TB scan), then a log-depth `treeReduce` of partition trees.
-  *    Each tree is O(#clusters) — kilobytes, not data-sized — so the
-  *    reduction moves trivial state. Cluster IDs are synthetic in this
-  *    mode; (template, size) content is the stable surface.
+  *    the 100 TB scan), then a fixed-order fold of the partition trees:
+  *    groups of [[FanIn]] consecutive partitions fold on the executors
+  *    until at most [[FanIn]] trees remain, and those fold on the driver
+  *    in partition order. [[DrainTree.merge]] depends on order, so the
+  *    order comes from the input partitioning alone, never from task
+  *    completion: a given partitioning always yields the same clusters.
+  *    Each tree is O(#clusters) — kilobytes, not data-sized — so the fold
+  *    moves trivial state. Cluster IDs are synthetic in this mode;
+  *    (template, size) content is the stable surface.
   *
   * Matching (assignment of lines to a FIXED mined template set) is the
   * embarrassingly-parallel half of the pipeline: the tree is broadcast
@@ -25,10 +32,13 @@ import org.apache.spark.sql.functions.col
   */
 object TemplateMining {
 
+  /** Trees per fold group in [[mineParallel]]: the driver folds at most
+    * this many, and each executor-side level divides the count by it. */
+  private val FanIn = 8
+
   /** Exact (reference-faithful) mining: global sort on `order`, single
     * partition, one tree. */
-  def mineExact(lines: DataFrame, lineCol: String, order: Seq[Column],
-                config: DrainConfig = DrainConfig()): Dataset[EventTemplate] = {
+  def mineExact(lines: DataFrame, lineCol: String, order: Seq[Column]): Dataset[EventTemplate] = {
     val spark = lines.sparkSession
     import spark.implicits._
     lines
@@ -36,40 +46,51 @@ object TemplateMining {
       .repartition(1)
       .sortWithinPartitions(order.indices.map(i => col(s"__o$i")): _*)
       .select(col("line")).as[String]
-      .mapPartitions { it =>
-        val tree = config.newTree()
-        it.foreach(l => tree.addLogMessage(if (l == null) "" else l))
-        tree.clusters.iterator
-      }
+      .mapPartitions(it => buildTree(it).clusters.iterator)
   }
 
-  /** Parallel mining: per-partition trees merged pairwise. `repartitionTo`
-    * (0 = keep input partitioning) controls the fan-in; at cluster scale
-    * the input partitioning (one task per scan split) is what you want. */
-  def mineParallel(lines: DataFrame, lineCol: String,
-                   config: DrainConfig = DrainConfig(),
-                   repartitionTo: Int = 0): Dataset[EventTemplate] = {
+  /** Parallel mining: one tree per input partition, then the fixed-order
+    * fold described above. An executor-side level shuffles only the trees,
+    * keyed by partition index, so the scan keeps its own task parallelism
+    * (a narrow `coalesce` would pull every tree build into the group
+    * tasks); each group folds in ascending partition index. */
+  def mineParallel(lines: DataFrame, lineCol: String): Dataset[EventTemplate] = {
     val spark = lines.sparkSession
     import spark.implicits._
-    val src = if (repartitionTo > 0) lines.repartition(repartitionTo) else lines
-    val trees = src.select(col(lineCol)).as[String].rdd
-      .mapPartitions { it =>
-        val tree = config.newTree()
-        it.foreach(l => tree.addLogMessage(if (l == null) "" else l))
-        Iterator.single(tree)
-      }
-    val merged =
-      if (trees.getNumPartitions == 0) config.newTree()
-      else trees.treeReduce((a, b) => a.merge(b), depth = 3)
-    spark.createDataset(merged.clusters)
+    var trees: RDD[DrainTree] = lines.select(col(lineCol)).as[String].rdd
+      .mapPartitions(it => Iterator.single(buildTree(it)))
+    while (trees.getNumPartitions > FanIn) {
+      val groups = new ConsecutiveGroups((trees.getNumPartitions + FanIn - 1) / FanIn)
+      trees = trees
+        .mapPartitionsWithIndex((i, it) => it.map(t => (i, t)))
+        .partitionBy(groups)
+        .mapPartitions(it => Iterator.single(fold(it.toSeq.sortBy(_._1).iterator.map(_._2))))
+    }
+    spark.createDataset(fold(trees.collect().iterator).clusters)
+  }
+
+  /** The per-partition tree builder of both modes. */
+  private def buildTree(lines: Iterator[String]): DrainTree = {
+    val tree = new DrainTree()
+    lines.foreach(l => tree.addLogMessage(if (l == null) "" else l))
+    tree
+  }
+
+  /** Folds `trees` into an empty tree in iteration order. */
+  private def fold(trees: Iterator[DrainTree]): DrainTree =
+    trees.foldLeft(new DrainTree())(_ merge _)
+
+  /** Sends partition index `i` to fold group `i / FanIn`. */
+  private final class ConsecutiveGroups(val numPartitions: Int) extends Partitioner {
+    override def getPartition(key: Any): Int = key.asInstanceOf[Int] / FanIn
   }
 
   /** Build a probe tree from a mined template table (e.g. a persisted
     * `Dataset[EventTemplate]` — M4's batch state store). Clusters are
     * restored VERBATIM: ids, sizes and templates survive a
     * save → restore → match round-trip unchanged. */
-  def treeFromTemplates(templates: Seq[EventTemplate], config: DrainConfig = DrainConfig()): DrainTree = {
-    val tree = config.newTree()
+  def treeFromTemplates(templates: Seq[EventTemplate]): DrainTree = {
+    val tree = new DrainTree()
     templates.sortBy(_.eventId).foreach(tree.restore)
     tree
   }
@@ -112,24 +133,4 @@ object TemplateMining {
     }
     lines.withColumn("eventId", matchUdf(col(lineCol)))
   }
-}
-
-/** Mining configuration — reference defaults (`drain3.ini`, mirrored at
-  * `process_logs_v10.py:8-17`): tree depth 4, similarity 0.4, 100
-  * children per node. DELIBERATE DEVIATION: the reference caps clusters
-  * at 10000 (`max_clusters=10000`) with LRU eviction; the engine defaults
-  * to UNBOUNDED (`maxClusters = 0`) because the LRU touch makes a bounded
-  * tree mutate on probe — unsafe for the broadcast matcher's concurrent
-  * executor threads. Behavior is identical until the 10001st cluster (its
-  * corpora mine ~1.1k); set `maxClusters = 10000` explicitly for
-  * reference-faithful eviction in single-threaded mining. */
-case class DrainConfig(
-    depth: Int = 4,
-    simTh: Double = 0.4,
-    maxChildren: Int = 100,
-    maxClusters: Int = 0,
-    parametrizeNumericTokens: Boolean = true) {
-  def newTree(): DrainTree =
-    new DrainTree(depth, simTh, maxChildren, maxClusters,
-      parametrizeNumericTokens = parametrizeNumericTokens)
 }

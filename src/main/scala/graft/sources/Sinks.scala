@@ -157,11 +157,6 @@ object Sinks {
     writeChartData(dist, path, "bar", dist.columns(0), dist.columns(1),
       title = "Distribution Des Événements", xtickEvery = 5)
 
-  /** The reference's PCA scatter (`pc1`, `pc2`, colored by `label`). */
-  def chartPcaScatter(proj: DataFrame, path: String): Unit =
-    writeChartData(proj, path, "scatter", "pc1", "pc2", color = Some("label"),
-      title = "PCA")
-
   def saveTemplates(templates: Dataset[EventTemplate], path: String): Unit =
     templates.write.mode("overwrite").parquet(path)
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-import graft.mine.{DrainConfig, DrainTree, EventTemplate}
+import graft.mine.{DrainTree, EventTemplate}
 
 /** Structured Streaming surface (SURVEY.md §7.2 step 8).
   *
@@ -43,8 +43,8 @@ object StreamingOps {
     * merge — pair with [[graft.mine.TemplateMining.treeFromTemplates]]).
     * State is the Java-serializable [[DrainTree]]; checkpointing the query
     * persists it (the engine-native replacement for drain3_state.bin). */
-  def streamingMine(lines: Dataset[(Int, String)], config: DrainConfig = DrainConfig()): Dataset[(Int, EventTemplate)] =
-    streamingMineFrom(lines, () => config.newTree())
+  def streamingMine(lines: Dataset[(Int, String)]): Dataset[(Int, EventTemplate)] =
+    streamingMineFrom(lines, () => new DrainTree())
 
   /** [[streamingMine]] with an arbitrary INITIAL-STATE factory — the
     * migration-resume surface: seed each shard's first micro-batch from

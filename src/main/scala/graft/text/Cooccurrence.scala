@@ -40,8 +40,8 @@ object Cooccurrence {
     val spark = docs0.sparkSession
     graft.functions.VocabTf.register(spark)
     graft.functions.SortedPairs.register(spark)
-    // tokenize ONCE into a persisted per-doc token frame (the perDocTf
-    // precedent): the df aggregate, the corpus count and the
+    // tokenize ONCE into a persisted per-doc token frame: the df
+    // aggregate, the corpus count and the
     // VocabTf+SortedPairs pair projection all read it — the tokenizer
     // (the dominant CPU of both passes) runs a single time. Widened
     // before tokenize+persist so no stage inherits the scan's 2-3

@@ -49,18 +49,9 @@ object Postings {
 
   /** ONE corpus pass: `(id, dl, __tfm)` per document, where `__tfm` is
     * the vocabulary-cut term-frequency map (≤ |vocab| entries). Widened
-    * before tokenize+persist so downstream explode/score stages never
-    * inherit the scan's 2-3 row-group partitions; persisted because the
-    * corpus constants, the df/cf aggregates and the score join all read
-    * it. Caller owns the unpersist (bench/verify clear caches per
-    * query). */
-  def perDocTf(corpus: DataFrame, idCol: String, textCol: String,
-               vocab: Array[String]): DataFrame =
-    perDocTfUncached(corpus, idCol, textCol, vocab)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** [[perDocTf]] without the persist — for SINGLE-retriever paths that
-    * read the frame a bounded number of times: re-running the narrow
+    * before tokenize so downstream explode/score stages never inherit the
+    * scan's 2-3 row-group partitions. Not persisted: the retriever paths
+    * read the frame a bounded number of times, and re-running the narrow
     * scan+VocabTf projection is cheaper than building a deserialized
     * map-column cache (measured ~1 s of cache-construction wall at
     * sf0.1 against ~0.15 s per extra scan). */

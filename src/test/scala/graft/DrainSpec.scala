@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.mine.{DrainConfig, DrainTree, EventTemplate, TemplateMining}
+import graft.mine.{DrainTree, EventTemplate, TemplateMining}
 
 /** Golden + property tests for the Drain mining core (SURVEY.md §5.2).
   *
@@ -46,7 +46,7 @@ class DrainGoldenSpec extends AnyFunSuite {
 
   test("exact-mode tree reproduces the reference cluster dump (id, template) bit-for-bit") {
     assume(GoldenFixture.available)
-    val tree = DrainConfig().newTree()
+    val tree = new DrainTree()
     GoldenFixture.lines().foreach(tree.addLogMessage)
     val mined = tree.clusters
     val golden = GoldenFixture.golden()
@@ -66,7 +66,7 @@ class DrainGoldenSpec extends AnyFunSuite {
     * from an extra partial run over a file not committed to the repo. */
   test("10 replays reproduce golden sizes (clusters 5..100 exact; 1-4 carry the known +30)") {
     assume(GoldenFixture.available)
-    val tree = DrainConfig().newTree()
+    val tree = new DrainTree()
     (1 to 10).foreach(_ => GoldenFixture.lines().foreach(tree.addLogMessage))
     val golden = GoldenFixture.golden().map(t => t.eventId -> t).toMap
     val diffs = tree.clusters.flatMap { m =>
@@ -83,7 +83,7 @@ class DrainGoldenSpec extends AnyFunSuite {
     import spark.implicits._
     val df = GoldenFixture.lines().zipWithIndex.toDF("line", "idx")
     val mined = TemplateMining.mineExact(df, "line", Seq($"idx")).collect().sortBy(_.eventId)
-    val tree = DrainConfig().newTree()
+    val tree = new DrainTree()
     GoldenFixture.lines().foreach(tree.addLogMessage)
     assert(mined.toSeq == tree.clusters)
   }
@@ -108,7 +108,7 @@ class DrainPropertySpec extends AnyFunSuite {
     (0 until n).map(i => s"worker ${i % 7} finished task ${i} in ${i % 13} ms status ${if (i % 5 == 0) "FAIL" else "OK"}")
 
   test("merge preserves total size (mass conservation)") {
-    val (a, b) = (DrainConfig().newTree(), DrainConfig().newTree())
+    val (a, b) = (new DrainTree(), new DrainTree())
     val lines = mkLines(500)
     lines.take(250).foreach(a.addLogMessage)
     lines.drop(250).foreach(b.addLogMessage)
@@ -118,7 +118,7 @@ class DrainPropertySpec extends AnyFunSuite {
 
   test("merge is commutative on (template,size) mass up to generalization") {
     val lines = mkLines(400)
-    def tree(ls: Seq[String]) = { val t = DrainConfig().newTree(); ls.foreach(t.addLogMessage); t }
+    def tree(ls: Seq[String]) = { val t = new DrainTree(); ls.foreach(t.addLogMessage); t }
     val ab = tree(lines.take(200)).merge(tree(lines.drop(200)))
     val ba = tree(lines.drop(200)).merge(tree(lines.take(200)))
     assert(ab.totalSize == ba.totalSize)
@@ -126,7 +126,7 @@ class DrainPropertySpec extends AnyFunSuite {
   }
 
   test("matchLine finds the owning cluster for trained lines; total on garbage") {
-    val t = DrainConfig().newTree()
+    val t = new DrainTree()
     val lines = mkLines(100)
     lines.foreach(t.addLogMessage)
     assert(lines.forall(l => t.matchLine(l) > 0))
@@ -141,27 +141,50 @@ class DrainPropertySpec extends AnyFunSuite {
   }
 }
 
-class DrainAggregatorSpec extends AnyFunSuite {
-  test("Aggregator surface mines the corpus with mass conservation") {
-    assume(GoldenFixture.available)
-    val spark = TestSession.spark
-    import spark.implicits._
-    val ds = spark.createDataset(GoldenFixture.lines())
-    val out = ds.select(graft.mine.DrainAggregator().toColumn).head()
-    assert(out.map(_.size).sum == 1282L)
-    val exact = GoldenFixture.golden().size
-    assert(out.size.toDouble / exact > 0.5 && out.size.toDouble / exact < 2.0)
+/** The DataFrame mining operators of [[TemplateMining]]. */
+class TemplateMiningSpec extends AnyFunSuite {
+
+  /** Hadoop-grammar lines (level, thread, logger, message) whose messages
+    * draw 3-6 words from a small vocabulary plus numeric parameters. The
+    * shared level/thread/logger tokens put most same-length pairs near the
+    * 0.4 similarity threshold, so which clusters form and generalize
+    * depends on the order the partition trees merge in. */
+  private def hadoopLines(n: Int): Seq[String] = {
+    val rnd = new scala.util.Random(7)
+    val words = Seq("task", "attempt", "container", "map", "reduce", "fetch",
+      "shuffle", "commit", "done", "failed", "spill", "merge")
+    val loggers = Seq("org.apache.hadoop.mapred.Task:",
+      "org.apache.hadoop.mapred.MapTask:",
+      "org.apache.hadoop.mapreduce.task.reduce.Fetcher:",
+      "org.apache.hadoop.mapreduce.v2.app.rm.RMContainerAllocator:")
+    val templates = Seq.fill(120) {
+      val head = Seq(if (rnd.nextInt(10) == 0) "WARN" else "INFO",
+        if (rnd.nextBoolean()) "[main]" else "[fetcher#1]",
+        loggers(rnd.nextInt(loggers.length)))
+      head ++ Seq.fill(3 + rnd.nextInt(4))(
+        if (rnd.nextInt(4) == 0) "{n}" else words(rnd.nextInt(words.length)))
+    }
+    Seq.fill(n) {
+      templates(rnd.nextInt(templates.length))
+        .map(t => if (t == "{n}") rnd.nextInt(100000).toString else t).mkString(" ")
+    }
   }
 
-  test("Aggregator per-key mining via groupByKey") {
-    assume(GoldenFixture.available)
+  test("mineParallel is deterministic for a given input partitioning") {
     val spark = TestSession.spark
     import spark.implicits._
-    val ds = spark.createDataset(GoldenFixture.lines().zipWithIndex.map { case (l, i) => (i % 2, l) })
-    val out = ds.groupByKey(_._1).mapValues(_._2)
-      .agg(graft.mine.DrainAggregator().toColumn).collect()
-    assert(out.length == 2)
-    assert(out.map(_._2.map(_.size).sum).sum == 1282L)
+    val lines = hadoopLines(20000)
+    val df = lines.toDF("line").cache()
+    try {
+      for (parts <- Seq(4, 64)) {
+        val runs = (1 to 5).map(_ =>
+          TemplateMining.mineParallel(df.repartition(parts), "line").collect().toSeq)
+        assert(runs.head.map(_.size).sum == lines.length,
+          s"$parts partitions: mined mass must equal the line count")
+        assert(runs.distinct.length == 1,
+          s"$parts partitions: 5 calls on identical input gave ${runs.distinct.length} results")
+      }
+    } finally df.unpersist()
   }
 
   test("exactMatchCounts: deterministic digit-mask equi-join — mass " +

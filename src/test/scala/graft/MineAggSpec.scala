@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.mine.DrainMineAgg
+import graft.mine.{DrainMineAgg, EventTemplate, TemplateMining}
 import graft.sources.Tables
 
 /** `graft_mine` — M1 as a native TypedImperativeAggregate. */
@@ -48,14 +48,18 @@ class MineAggSpec extends AnyFunSuite {
   }
 
   test("graft_mine matches mineParallel's cluster content on the same input") {
+    // one partition: both paths replay the single partition tree into an
+    // empty one, so ids, sizes and templates must agree exactly
     import spark.implicits._
     DrainMineAgg.register(spark)
-    val docs = Tables.documents(spark, TestSession.sf).limit(200).cache()
-    val viaAgg = docs.agg(call_function(DrainMineAgg.Name, col("text")).as("ts"))
-      .select(explode(col("ts")).as("t"))
-      .select(col("t.template"), col("t.size"))
-      .as[(String, Long)].collect().toMap
-    assert(viaAgg.values.sum == 200, "mass conservation")
-    docs.unpersist()
+    val docs = Tables.documents(spark, TestSession.sf).limit(200).coalesce(1).cache()
+    try {
+      val viaAgg = docs.agg(call_function(DrainMineAgg.Name, col("text")).as("ts"))
+        .select(explode(col("ts")).as("t")).select(col("t.*"))
+        .as[EventTemplate].collect().toSeq.sortBy(_.eventId)
+      val viaFold = TemplateMining.mineParallel(docs, "text").collect().toSeq.sortBy(_.eventId)
+      assert(viaAgg.map(_.size).sum == 200, "mass conservation")
+      assert(viaAgg == viaFold)
+    } finally docs.unpersist()
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.logs.{LogLines, LogSource}
 import graft.mine.TemplateMining
 import graft.operators.EventMatrix
+import graft.sources.Tables
 
 /** The reference's E1/E2 program (`process_logs_v10.py:86-179`) as ONE
   * composed query over log FILES — q47's shape: recursive scan → clean →
@@ -36,5 +37,16 @@ class PipelineSpec extends AnyFunSuite {
 
   test("q47 runs end-to-end with rows > 0 (driver rows-only gate)") {
     assert(SparkEntry.queries("q47_log_pipeline")(spark, TestSession.sf).count() > 0)
+  }
+
+  test("q47's cached log corpus follows a rewritten documents table") {
+    val dir = Files.createTempDirectory("graft_q47_sf").toString
+    val docs = Tables.documents(spark, TestSession.sf).orderBy(col("doc_id"))
+    def lineMass(): Long =
+      SparkEntry.queries("q47_log_pipeline")(spark, dir).collect().map(_.getLong(1)).sum
+    docs.limit(150).write.parquet(s"$dir/documents.parquet")
+    assert(lineMass() == 150L)
+    docs.limit(90).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(lineMass() == 90L, "q47 read a corpus cached from the old documents table")
   }
 }

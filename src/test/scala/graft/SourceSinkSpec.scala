@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.logs.LogSource
-import graft.mine.{DrainConfig, TemplateMining}
+import graft.mine.{DrainTree, TemplateMining}
 import graft.sources.Sinks
 
 /** S1/S2/S4/S5 sources & sinks (FIXTURES.md §2 corpus layout). */
@@ -117,7 +117,7 @@ class SourceSinkSpec extends AnyFunSuite {
     assume(GoldenFixture.available)
     import spark.implicits._
     val mined = {
-      val t = DrainConfig().newTree()
+      val t = new DrainTree()
       GoldenFixture.lines().foreach(t.addLogMessage)
       t.clusters
     }

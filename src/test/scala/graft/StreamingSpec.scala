@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.mine.DrainConfig
+import graft.mine.DrainTree
 import graft.sources.Tables
 import graft.streaming.StreamingOps
 
@@ -161,7 +161,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val lines = GoldenFixture.lines()
     val input = MemoryStream[(Int, String)]
-    val q = StreamingOps.streamingMine(input.toDS(), DrainConfig())
+    val q = StreamingOps.streamingMine(input.toDS())
       .toDF("shard", "t")
       .writeStream.format("memory").queryName("mine_test").outputMode("append")
       .start()
@@ -179,7 +179,7 @@ class StreamingSpec extends AnyFunSuite {
       .select($"eventId", $"s.size", $"s.template")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
       .sortBy(_._1)
-    val seq = DrainConfig().newTree()
+    val seq = new DrainTree()
     lines.foreach(seq.addLogMessage)
     val expect = seq.clusters.map(t => (t.eventId, t.size, t.template))
     assert(snap.map(_._1).toSeq == expect.map(_._1), "cluster id sets differ")
@@ -205,7 +205,7 @@ class StreamingSpec extends AnyFunSuite {
     def startQuery() = {
       val lines = spark.readStream.text(inDir)
         .select(lit(0).as("shard"), col("value")).as[(Int, String)]
-      StreamingOps.streamingMine(lines, DrainConfig())
+      StreamingOps.streamingMine(lines)
         .map { case (shard, t) => (shard, t.eventId, t.size, t.template) }
         .toDF("shard", "event_id", "size", "template")
         .writeStream.format("parquet")
